@@ -1,37 +1,42 @@
-"""Single-entry per-session persisted-layout cache.
+"""Single-entry per-session caches for derived catalog state.
 
 Catalog queries that reuse a derived layout (bucketed embeddings, MinHash /
 SimHash signature scans, candidate pair sets) persist it once per
 (SparkSession, table dir) — locally a ``persist()``, at 100 TB a layout
-written next to the table at ingest. Keeping ONE live entry per cache and
-unpersisting the displaced DataFrame bounds executor storage in long-lived
-multi-session processes: a stale applicationId (or a switch to another
-table dir) can never pin dead blocks.
+written next to the table at ingest — and keep derived driver-side values
+(a count, a split point, a query vector) the same way. Both share one
+lifecycle, :class:`SessionScalarCache`; :class:`SessionLayoutCache` only
+persists the value it keeps and unpersists the one it drops. ONE live
+entry per cache bounds executor storage in long-lived multi-session
+processes: a stale applicationId or a switch to another table dir can
+never pin dead blocks.
 
-Staleness contract (tests/test_cache_lifecycle.py pins it): an entry has
-the same semantics as Spark's own ``persist()`` because it IS one —
-writes that go THROUGH the session are picked up automatically (Spark's
-``InsertIntoHadoopFsRelation`` refreshes cached blocks by path), while a
-mutation Spark cannot see (an external process rewriting the files) keeps
-serving the materialized snapshot. That out-of-band case is deliberate:
-the testdata dirs are read-only and a 100 TB ingest-time layout is
-versioned with its table, so change detection would buy nothing and cost
-a listing per call. External writers must call
-:meth:`SessionLayoutCache.invalidate` (or open a new session / new dir)
-before reading layout-backed queries.
+Staleness contract (tests/test_cache_lifecycle.py pins it): a layout entry
+IS a Spark ``persist()``, so writes that go THROUGH the session are picked
+up automatically (``InsertIntoHadoopFsRelation`` refreshes cached blocks by
+path), while a mutation Spark cannot see (an external process rewriting
+the files) keeps serving the snapshot. That is deliberate: the testdata
+dirs are read-only and a 100 TB ingest-time layout is versioned with its
+table, so change detection would cost a listing per call for nothing.
+External writers must call the module-level :func:`invalidate` (or open a
+new session / new dir) before reading cache-backed queries; it drops every
+entry at once, so no derived value outlives the layout it came from.
 """
 
 from __future__ import annotations
 
 import threading
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_CACHES: weakref.WeakSet[SessionScalarCache] = weakref.WeakSet()
 
-class SessionLayoutCache:
-    """One live persisted DataFrame, keyed by (SparkSession identity,
-    applicationId, sf_dir).
+
+class SessionScalarCache:
+    """One live driver-side value (a count, a split point, a query vector),
+    keyed by (SparkSession identity, applicationId, sf_dir).
 
     The SESSION must be part of the key, not just the applicationId: a
     DataFrame is bound to the session that built it, and sibling sessions
@@ -44,77 +49,30 @@ class SessionLayoutCache:
     ``sql_dup_clusters_recursive``). Alternating sibling sessions
     therefore rebuild rather than share — correct, just unshared; one
     session per catalog run (the normal shape) still pays the build once.
+
+    A cached ``None`` (an empty-input sentinel) is a value, not a miss.
+    The new value is built before the old one is released, so a failed
+    build leaves the old entry in place.
     """
-
-    def __init__(self) -> None:
-        self._session: SparkSession | None = None
-        self._key: tuple[str, str] | None = None
-        self._value: DataFrame | None = None
-        # the serving layer can run catalog queries from concurrent
-        # request threads; without the lock two simultaneous misses
-        # double-build and the loser's persist() leaks (displaced with no
-        # unpersist). build() runs under the lock — a duplicate build
-        # costs more than the brief serialization it prevents.
-        self._lock = threading.Lock()
-
-    def get_or_build(
-        self,
-        spark: SparkSession,
-        sf_dir: str,
-        build: Callable[[], DataFrame],
-    ) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with self._lock:
-            if self._key != key or self._session is not spark:
-                displaced = self._value
-                self._session, self._key, self._value = (
-                    spark,
-                    key,
-                    build().persist(),
-                )
-                if displaced is not None:
-                    try:
-                        displaced.unpersist()
-                    except Exception:
-                        pass  # dead session: blocks are already gone
-            return self._value
-
-    def invalidate(self) -> None:
-        """Drop the live entry so the next get_or_build rebuilds from the
-        current table state — the explicit escape hatch of the snapshot
-        contract (module docstring) for in-place table mutation."""
-        with self._lock:
-            displaced, self._session, self._key, self._value = (
-                self._value,
-                None,
-                None,
-                None,
-            )
-            if displaced is not None:
-                try:
-                    displaced.unpersist()
-                except Exception:
-                    pass  # dead session: blocks are already gone
-
-
-class SessionScalarCache:
-    """Scalar sibling of :class:`SessionLayoutCache` — one live driver-side
-    value (a count, a split point) derived from a session-persisted layout,
-    keyed by the same (session identity, applicationId, sf_dir) triple with
-    the same single-entry displacement and ``invalidate`` escape hatch.
-
-    Replaces the bare module-level ``dict[(applicationId, sf_dir), int]``
-    caches (r15 ADVICE/VERDICT item 8): those grew without bound across app
-    restarts inside one process and ignored the invalidate contract an
-    external table writer relies on. A scalar entry holds no executor
-    blocks, so displacement is just dropping the reference."""
 
     def __init__(self) -> None:
         self._session: SparkSession | None = None
         self._key: tuple[str, str] | None = None
         self._value = None
         self._has_value = False
+        # the serving layer can run catalog queries from concurrent
+        # request threads; without the lock two simultaneous misses
+        # double-build and the loser's persist() leaks (displaced with no
+        # unpersist). build() runs under the lock — a duplicate build
+        # costs more than the brief serialization it prevents.
         self._lock = threading.Lock()
+        _CACHES.add(self)
+
+    def _keep(self, value):
+        return value
+
+    def _release(self, value) -> None:
+        pass
 
     def get_or_build(self, spark: SparkSession, sf_dir: str, build: Callable):
         key = (spark.sparkContext.applicationId, sf_dir)
@@ -124,11 +82,41 @@ class SessionScalarCache:
                 or self._key != key
                 or self._session is not spark
             ):
+                value = self._keep(build())
+                self._drop()
                 self._session, self._key = spark, key
-                self._value, self._has_value = build(), True
+                self._value, self._has_value = value, True
             return self._value
 
+    def _drop(self) -> None:
+        if self._has_value:
+            self._release(self._value)
+        self._session, self._key = None, None
+        self._value, self._has_value = None, False
+
     def invalidate(self) -> None:
+        """Drop the live entry so the next get_or_build rebuilds from the
+        current table state."""
         with self._lock:
-            self._session, self._key = None, None
-            self._value, self._has_value = None, False
+            self._drop()
+
+
+class SessionLayoutCache(SessionScalarCache):
+    """One live persisted DataFrame: the value is ``persist()``-ed when
+    kept and ``unpersist()``-ed when displaced or invalidated."""
+
+    def _keep(self, value: DataFrame) -> DataFrame:
+        return value.persist()
+
+    def _release(self, value: DataFrame) -> None:
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # dead session: blocks are already gone
+
+
+def invalidate() -> None:
+    """Drop every entry of every session cache — the escape hatch of the
+    snapshot contract (module docstring) for out-of-band table writes."""
+    for cache in list(_CACHES):
+        cache.invalidate()

@@ -118,8 +118,11 @@ def _bucketed(spark, sf_dir):
     )
 
 
-def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> F.Column:
-    """The query vector as a literal array expression.
+_QUERY_VEC = SessionScalarCache()
+
+
+def _query_vec_literal(spark, sf_dir) -> list[float]:
+    """The query vector (vec_id 0) as the values of a literal array.
 
     A similarity query's vector is a *parameter*, not a joinable relation:
     one pushed-filter point lookup fetches it, then it's inlined as 64
@@ -130,28 +133,24 @@ def _query_vec_literal(spark, sf_dir, vec_id: int = 0) -> F.Column:
     paid a full-table `parallelize_scan` shuffle + broadcast exchange on
     this path twice per ANN query — the 19.5 s outlier.)
     """
-    key = (sf_dir, vec_id)
-    vals = _QUERY_VEC_CACHE.get(key)
-    if vals is None:
+
+    def build():
         row = (
             load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == vec_id)
+            .filter(F.col("vec_id") == 0)
             .select("embedding")
             .head()
         )
         if row is None:
-            raise ValueError(f"query vector vec_id={vec_id} not found in {sf_dir}")
+            raise ValueError(f"query vector vec_id=0 not found in {sf_dir}")
         # Literal round-trip is exact: parquet float32 -> Python float ->
         # literal double is the same IEEE value the in-plan cast produces.
-        vals = [float(x) for x in row[0]]
-        _QUERY_VEC_CACHE[key] = vals
-    return vals
+        return [float(x) for x in row[0]]
+
+    return _QUERY_VEC.get_or_build(spark, sf_dir, build)
 
 
-_QUERY_VEC_CACHE: dict[tuple[str, int], list[float]] = {}
-
-
-def _query_param(spark, sf_dir, vec_id: int = 0):
+def _query_param(spark, sf_dir):
     """(vector literal, bucket literal, norm literal) for the query vector.
 
     Bucket and norm are computed driver-side by the bit-identical Python
@@ -160,7 +159,7 @@ def _query_param(spark, sf_dir, vec_id: int = 0):
     partition pruning at scale) instead of a per-row re-fold of the query's
     8×64 hyperplane projection, which Catalyst cannot constant-fold
     (higher-order functions are non-foldable)."""
-    vals = _query_vec_literal(spark, sf_dir, vec_id)
+    vals = _query_vec_literal(spark, sf_dir)
     qvec = F.array(*[F.lit(x).cast("double") for x in vals])
     return qvec, F.lit(lsh_bucket_py(vals)), F.lit(l2_norm_py(vals))
 
@@ -791,16 +790,16 @@ from nyc_taxi_pyspark_spark.operators.similarity import (  # noqa: E402
     ivf_cell_py,
 )
 
-_CENTROID_CACHE: dict[str, list] = {}
+_CENTROIDS = SessionScalarCache()
 
 
 def _centroids(spark, sf_dir):
     """Training-free deterministic centroids: the vectors with ids
-    1..N_CENTROIDS, fetched once per table and inlined as literals (same
-    parameter discipline as the query vector). The DuckDB oracle derives
-    the identical centroids from the table itself."""
-    cs = _CENTROID_CACHE.get(sf_dir)
-    if cs is None:
+    1..N_CENTROIDS, fetched once per (session, table) and inlined as
+    literals (same parameter discipline as the query vector). The DuckDB
+    oracle derives the identical centroids from the table itself."""
+
+    def build():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id").between(1, N_CENTROIDS))
@@ -813,8 +812,9 @@ def _centroids(spark, sf_dir):
             raise ValueError(
                 f"no centroid vectors (vec_id 1..{N_CENTROIDS}) in {sf_dir}"
             )
-        _CENTROID_CACHE[sf_dir] = cs
-    return cs
+        return cs
+
+    return _CENTROIDS.get_or_build(spark, sf_dir, build)
 
 
 _IVF_CACHE = SessionLayoutCache()

@@ -169,13 +169,6 @@ def oracle_davg(expr: str, scale: int = 4) -> str:
     return f"({oracle_dsum(expr, scale)} / COUNT({expr}))"
 
 
-def oracle_dstddev(expr: str, scale: int = 4) -> str:
-    sx = oracle_dsum(expr, scale)
-    sxx = oracle_dsum(f"({expr})*({expr})", scale)
-    n = f"CAST(COUNT({expr}) AS DOUBLE)"
-    return f"SQRT(({sxx} - ({sx})*({sx})/{n}) / ({n} - 1.0))"
-
-
 def is_finite(col: Column | str) -> Column:
     """TRUE iff the double is a real number — not NULL, not NaN, not ±Inf.
 

@@ -18,7 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nyc_taxi_pyspark_spark.functions.exact import davg, dsum
+from nyc_taxi_pyspark_spark.functions.exact import davg
 
 
 def null_scan(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -33,22 +33,6 @@ def null_scan(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
             for c in cols
         ]
     )
-
-
-def kpi_by(
-    df: DataFrame,
-    keys: Sequence[str] | Sequence[Column],
-    measures: dict[str, Column],
-    order_desc_by: str | None = None,
-) -> DataFrame:
-    """The workhorse KPI shape (A5; reference spark_jobs/02e:63-66):
-    groupBy(keys).agg(measures), optionally ordered by one measure desc with
-    the keys as deterministic tie-breakers."""
-    out = df.groupBy(*keys).agg(*[c.alias(n) for n, c in measures.items()])
-    if order_desc_by is not None:
-        key_names = [k for k in keys if isinstance(k, str)]
-        out = out.orderBy(F.desc(order_desc_by), *key_names)
-    return out
 
 
 def duplicate_group_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -99,7 +83,3 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
         F.expr(f"percentile({col}, {q})").alias(f"p{int(q * 100):02d}") for q in qs
     ]
     return df.agg(*rows)
-
-
-def grand_total_sum(df: DataFrame, col: str, scale: int = 4) -> DataFrame:
-    return df.agg(dsum(col, scale).alias(f"sum_{col}"))

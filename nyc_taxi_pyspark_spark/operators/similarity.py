@@ -1,6 +1,6 @@
-"""Embedding similarity search (north-star extension): brute-force cosine
-top-k as the exact baseline, plus a hyperplane-LSH bucketed variant as the
-approximate scale path.
+"""Embedding similarity search (north-star extension): the exact cosine
+expression behind the catalog's brute-force top-k, plus hyperplane-LSH
+buckets and multi-probe ANN as the approximate scale path.
 
 Scale design:
   - Dot products / norms are row-level array expressions (zip_with +
@@ -179,52 +179,6 @@ def cosine_sim_expr(vec_col: str, query_vec: Column, query_norm: Column | None) 
     row — identical bits, one-third less per-row work."""
     qn = query_norm if query_norm is not None else l2_norm(query_vec)
     return safe_div(dot(F.col(vec_col), query_vec), l2_norm(F.col(vec_col)) * qn)
-
-
-def cosine_topk(
-    corpus: DataFrame,
-    query_vec: Column,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_norm: Column | None = None,
-) -> DataFrame:
-    """Brute-force exact top-k by cosine vs one query vector.
-
-    The query vector is attached as a literal-free crossJoin of a 1-row
-    DataFrame (broadcast — each partition scans once); ordering carries the
-    id as tie-breaker for determinism.
-    """
-    sim = cosine_sim_expr(vec_col, query_vec, query_norm).alias("cosine_sim")
-    return (
-        corpus.select(F.col(id_col), sim)
-        .orderBy(F.desc("cosine_sim"), id_col)
-        .limit(k)
-    )
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    query_vec: Column,
-    query_bucket: Column,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_norm: Column | None = None,
-) -> DataFrame:
-    """Approximate top-k: restrict the exact scan to the query's LSH bucket.
-
-    At scale the bucket column is precomputed and partitioned/bucketed on
-    disk, so the filter becomes partition pruning — the scan touches
-    1/2^n_planes of the corpus."""
-    bucketed = corpus.withColumn("bucket", lsh_bucket(F.col(vec_col)))
-    sim = cosine_sim_expr(vec_col, query_vec, query_norm).alias("cosine_sim")
-    return (
-        bucketed.filter(F.col("bucket") == query_bucket)
-        .select(F.col(id_col), sim)
-        .orderBy(F.desc("cosine_sim"), id_col)
-        .limit(k)
-    )
 
 
 def bucket_join_candidates(

@@ -40,22 +40,10 @@ def has_broadcast_join(df: DataFrame) -> bool:
     )
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
-
-
 def uses_take_ordered(df: DataFrame) -> bool:
     """orderBy().limit() should compile to TakeOrderedAndProject — a
     per-partition heap + k-row merge, never a global sort."""
     return "TakeOrderedAndProject" in formatted_plan(df)
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans — wider is better (fewer breaks)."""
-    plan = formatted_plan(df)
-    return sum(
-        1 for line in plan.splitlines() if line.strip().startswith("WholeStageCodegen")
-    )
 
 
 def count_nodes(df: DataFrame, op: str) -> int:

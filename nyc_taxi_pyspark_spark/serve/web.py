@@ -31,6 +31,10 @@ route                 reference tab
                       users
 ====================  =========================================================
 
+Malformed parameters — a non-integer or negative ``n``, a ``threshold``
+outside [0, 1], an unknown preview ``table`` — come back as HTTP 400 with a
+message, like SQL errors.
+
 Run it as::
 
     python -m nyc_taxi_pyspark_spark.serve.web --sf-dir /root/testdata/sf0.001 \
@@ -52,6 +56,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 
 from nyc_taxi_pyspark_spark.serve.engine import Engine
 
@@ -60,6 +65,10 @@ _STYLE = (
     "collapse}td,th{border:1px solid #999;padding:2px 8px}nav a{margin-right:"
     "1em}form{margin:1em 0}</style>"
 )
+
+
+class BadRequest(ValueError):
+    """Malformed request input, answered with HTTP 400 and the message."""
 
 
 def _page(title: str, body: str) -> bytes:
@@ -147,6 +156,18 @@ class WebApp:
                 self._reports_ready = True
             return self.reports_dir
 
+    # -- request parameters --------------------------------------------------
+    def _row_count(self, q, default: int) -> int:
+        """``n`` as a row count, capped at ``preview_cap``."""
+        raw = q.get("n", [str(default)])[0]
+        try:
+            n = int(raw)
+        except ValueError:
+            n = -1
+        if n < 0:
+            raise BadRequest(f"n must be a non-negative integer, got {raw!r}")
+        return min(n, self.preview_cap)
+
     # -- routes --------------------------------------------------------------
     def index(self, _q) -> tuple[int, str, bytes]:
         body = (
@@ -207,8 +228,11 @@ class WebApp:
 
     def preview(self, q) -> tuple[int, str, bytes]:
         table = q.get("table", ["orders"])[0]
-        n = min(int(q.get("n", ["10"])[0]), self.preview_cap)
-        pdf = self.engine.preview(table, n=n)
+        n = self._row_count(q, 10)
+        try:
+            pdf = self.engine.preview(table, n=n)
+        except AnalysisException as e:
+            return 400, "text/plain", f"unknown table {table!r}: {e}".encode()
         if q.get("format", ["html"])[0] == "json":
             return 200, "application/json", pdf.to_json(orient="records").encode()
         return 200, "text/html", _page(f"preview: {table}", _table_html(pdf))
@@ -219,7 +243,7 @@ class WebApp:
         stmt = q.get("q", [""])[0].strip().rstrip(";")
         if not stmt:
             return 400, "text/plain", b"missing q parameter"
-        n = min(int(q.get("n", ["50"])[0]), self.preview_cap)
+        n = self._row_count(q, 50)
         try:
             pdf = to_pandas_sanitized(self.engine.sql(stmt), max_rows=n)
         except Exception as e:  # noqa: BLE001 - user-SQL console surface
@@ -275,8 +299,14 @@ class WebApp:
         )
         from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
-        threshold = float(q.get("threshold", ["0.5"])[0])
-        n = min(int(q.get("n", ["50"])[0]), self.preview_cap)
+        raw = q.get("threshold", ["0.5"])[0]
+        try:
+            threshold = float(raw)
+        except ValueError:
+            threshold = float("nan")
+        if not 0.0 <= threshold <= 1.0:
+            raise BadRequest(f"threshold must be a number in [0, 1], got {raw!r}")
+        n = self._row_count(q, 50)
         featured = self.featured_trips().na.fill({"payment_type": 5})
         scored = score_batch(load_model(self.model_dir), featured, threshold, sample_n=n)
         cols = [
@@ -350,7 +380,10 @@ class WebApp:
         name = self.ROUTES.get(path)
         if name is None:
             return 404, "text/plain", b"not found"
-        return getattr(self, name)(q)
+        try:
+            return getattr(self, name)(q)
+        except BadRequest as e:
+            return 400, "text/plain", str(e).encode()
 
 
 def make_server(app: WebApp, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:

@@ -1,19 +1,24 @@
-"""Session-layout cache lifecycle (VERDICT r9 item 7).
+"""Session cache lifecycle (VERDICT r9 item 7).
 
-The catalog's persisted layouts (_COPURCHASE_CACHE, the MinHash/SimHash
-signature layouts, IVF centroids, the trigram postings) are all instances
-of SessionLayoutCache, keyed by (session identity, applicationId,
-sf_dir). These tests pin
-the documented contract: an entry is a SNAPSHOT of the table at first use
-(same semantics as Spark's CACHE TABLE — in-place file mutation is not
-detected), invalidate() is the explicit escape hatch, and switching
-sf_dir or session rebuilds without manual action.
+The catalog's session state lives in catalog._cache: persisted layouts
+(_COPURCHASE_CACHE, the MinHash/SimHash signature layouts, IVF centroids,
+the trigram postings) are SessionLayoutCache instances, and derived
+driver-side values (_KCORE_K, the similarity query vector and centroids)
+are SessionScalarCache instances. Both follow ONE lifecycle, keyed by
+(session identity, applicationId, sf_dir). These tests pin the documented
+contract: an entry is a SNAPSHOT of the table at first use (same semantics
+as Spark's CACHE TABLE — in-place file mutation is not detected), the
+module-level ``_cache.invalidate()`` (or a cache's own ``invalidate()``) is
+the explicit escape hatch, and switching sf_dir or session rebuilds
+without manual action.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -228,3 +233,67 @@ def test_scalar_cache_follows_layout_lifecycle():
     assert cache.get_or_build(s2, "/d1", build(None)) is None
     assert cache.get_or_build(s2, "/d1", build(46)) is None
     assert calls == [41, 42, 43, 44, 45, None]
+
+
+def test_module_invalidate_drops_layouts_and_scalars(spark, tmp_path):
+    """One module-level invalidate() drops every entry: a layout and the
+    scalar derived from it are rebuilt together, and a failed build
+    leaves the previous entry in place."""
+    from nyc_taxi_pyspark_spark.catalog import _cache
+
+    table = str(tmp_path / "t.parquet")
+    _write(spark, table, 3)
+    layout, scalar = _cache.SessionLayoutCache(), _cache.SessionScalarCache()
+    df = layout.get_or_build(spark, "/d", lambda: spark.read.parquet(table))
+    assert scalar.get_or_build(spark, "/d", df.count) == 3
+    assert df.storageLevel.useMemory
+
+    def failing():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        layout.get_or_build(spark, "/other", failing)
+    assert layout.get_or_build(spark, "/d", failing) is df  # old entry kept
+
+    _cache.invalidate()
+    assert not df.storageLevel.useMemory  # layout unpersisted
+    assert scalar.get_or_build(spark, "/d", lambda: 7) == 7  # scalar rebuilt
+
+
+def test_similarity_memos_follow_invalidate(spark, tmp_path):
+    """The similarity query vector and IVF centroids are session state:
+    after an out-of-band rewrite of embeddings.parquet, invalidate()
+    makes the next call read the new values."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from conftest import SF_DIR
+
+    from nyc_taxi_pyspark_spark.catalog import _cache
+    from nyc_taxi_pyspark_spark.catalog.similarity import (
+        _centroids,
+        _query_vec_literal,
+    )
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "embeddings.parquet")
+    emb = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+    pq.write_table(emb, path)
+    old_q = _query_vec_literal(spark, sf)
+    old_c = _centroids(spark, sf)
+
+    # out-of-band rewrite: every vector scaled by 2 (exact in float32)
+    vecs = emb["embedding"].combine_chunks()
+    doubled = pa.ListArray.from_arrays(
+        vecs.offsets,
+        pc.multiply(vecs.values, pa.scalar(2.0, pa.float32())),
+        mask=vecs.is_null(),
+    )
+    pq.write_table(emb.set_column(1, "embedding", doubled), path)
+    _cache.invalidate()
+
+    assert _query_vec_literal(spark, sf) == [2 * x for x in old_q]
+    assert _centroids(spark, sf) == [
+        (i, [2 * x for x in v]) for i, v in old_c
+    ]

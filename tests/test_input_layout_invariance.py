@@ -65,25 +65,19 @@ def _canon_hash(df) -> str:
 
 @pytest.fixture(scope="module")
 def reshard_dir(spark, tmp_path_factory):
-    from nyc_taxi_pyspark_spark.streaming import runner
-
     from scripts.layout_invariance_audit import _build_resharded
 
     d = str(tmp_path_factory.mktemp("reshard"))
     _build_resharded(spark, SF, d)
-    before = set(runner._RUNNING)
+    before = {q.id for q in spark.streams.active}
     yield d
-    # unregister EVERY stream this module started (testdata dir AND
-    # reshard dir) so later streaming tests still observe a cold first
+    # stop EVERY stream this module started (testdata dir AND reshard
+    # dir) so later streaming tests still observe a cold first
     # invocation — leaking the testdata-dir stream broke the
     # reuse-counting test downstream in full-suite order
-    for k in set(runner._RUNNING) - before:
-        ent = runner._RUNNING.pop(k)
-        try:
-            if ent.q is not None:
-                ent.q.stop()
-        except Exception:
-            pass
+    for q in spark.streams.active:
+        if q.id not in before:
+            q.stop()
 
 
 @pytest.mark.parametrize("name", SUBSET)

@@ -3,7 +3,7 @@ same transform runs under readStream (memory sink, drained synchronously)."""
 
 from __future__ import annotations
 
-import os
+import contextlib
 import tempfile
 
 import pytest
@@ -287,15 +287,15 @@ def test_stateful_stream_matches_on_directory_table(spark, tmp_path):
         stream_stateful_totals,
     )
     from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
 
     sf = "/root/testdata/sf0.001"
     resharded = str(tmp_path / "resharded")
     load_table(spark, sf, "events").repartition(5).write.parquet(
         resharded + "/events.parquet"
     )
-    before = set(runner._RUNNING)
-    try:
+    # stop the streams this test starts so the reuse test below still
+    # observes a cold first invocation
+    with _stops_new_queries(spark):
         single = {
             tuple(r) for r in stream_stateful_totals(spark, sf).collect()
         }
@@ -305,303 +305,226 @@ def test_stateful_stream_matches_on_directory_table(spark, tmp_path):
         }
         assert len(single) > 0
         assert single == multi
+
+
+@contextlib.contextmanager
+def _stops_new_queries(*sessions):
+    """Stop, on exit, every query the block started on ``sessions``:
+    the ids active on exit minus the ids active on entry."""
+    before = {q.id for s in sessions for q in s.streams.active}
+    try:
+        yield
     finally:
-        # unregister the streams this test started so the reuse-counting
-        # test below still observes a cold first invocation
-        for k in set(runner._RUNNING) - before:
-            ent = runner._RUNNING.pop(k)
-            try:
-                if ent.q is not None:
-                    ent.q.stop()
-            except Exception:
-                pass
+        for s in sessions:
+            for q in s.streams.active:
+                if q.id not in before:
+                    q.stop()
+
+
+def _active_ids(*sessions) -> dict:
+    """{(session index, query name): query id} over the active queries."""
+    return {
+        (i, q.name): q.id
+        for i, s in enumerate(sessions)
+        for q in s.streams.active
+    }
+
+
+def _small_source(spark, tmp_path, n: int = 100):
+    """An ``n``-row events parquet directory and its schema."""
+    src = str(tmp_path / "src")
+    df = load_table(spark, SF_DIR, "events").limit(n)
+    df.write.parquet(src)
+    return src, spark.read.parquet(src).schema
 
 
 def test_sibling_sessions_keep_their_own_tracked_streams(spark):
     """The memory sink's table is a temp view of the session that started
-    the query, so the persistent-stream registry must key on the SESSION:
-    before it did, a sibling session's lookup failed the table read,
-    popped the entry and restarted — orphaning the first session's
-    still-running query (active, untracked, processing forever in a
-    long-lived multi-session server). Each session now keeps its own
-    tracked stream and every active query stays tracked."""
+    the query, so each session must own its query: a sibling session's
+    call starts its own query under the same name, gets the same rows,
+    and leaves the first session's query running."""
     from nyc_taxi_pyspark_spark.catalog.streaming import (
         stream_stateful_totals,
     )
-    from nyc_taxi_pyspark_spark.streaming import runner
 
-    sf = "/root/testdata/sf0.001"
-    # a tracked stream for this source left by an earlier test would turn
-    # the first call into a reuse and skew the two-new-entries count —
-    # start cold regardless of test order
-    for k in [k for k in runner._RUNNING if sf in str(k)]:
-        ent = runner._RUNNING.pop(k)
-        try:
-            if ent.q is not None:
-                ent.q.stop()
-        except Exception:
-            pass
-    before = set(runner._RUNNING)
+    sf = SF_DIR
     sib = spark.newSession()
-    try:
+    with _stops_new_queries(spark, sib):
         a = {tuple(r) for r in stream_stateful_totals(spark, sf).collect()}
+        mine = {q.name: q.id for q in spark.streams.active}
         b = {tuple(r) for r in stream_stateful_totals(sib, sf).collect()}
+        theirs = {q.name: q.id for q in sib.streams.active}
         assert a == b and len(a) > 0
-        new = set(runner._RUNNING) - before
-        assert len(new) == 2  # one tracked stream per session, no takeover
-        tracked = {
-            runner._RUNNING[k].q.id
-            for k in runner._RUNNING
-            if runner._RUNNING[k].q is not None
-        }
-        active = {q.id for q in spark.streams.active} | {
-            q.id for q in sib.streams.active
-        }
-        assert active <= tracked  # nothing runs untracked
-    finally:
-        for k in set(runner._RUNNING) - before:
-            ent = runner._RUNNING.pop(k)
-            try:
-                if ent.q is not None:
-                    ent.q.stop()
-            except Exception:
-                pass
+        shared = set(mine) & set(theirs)
+        assert len(shared) == 1  # one query per session under one name
+        (name,) = shared
+        assert mine[name] != theirs[name]
+        # the sibling's start took nothing over
+        assert {q.name: q.id for q in spark.streams.active} == mine
 
 
 def test_cached_stream_reuses_running_query(spark):
-    # second invocation must reuse the running stream (no full stream
-    # startup): same rows, and the persistent-stream registry holds ONE
-    # active query for the key
+    """A second invocation drains the running query (no full stream
+    startup): same rows, and the session still runs the SAME query id."""
     import time as _time
 
     from nyc_taxi_pyspark_spark.catalog.streaming import (
         stream_stateful_totals,
     )
-    from nyc_taxi_pyspark_spark.streaming import runner
 
-    sf = "/root/testdata/sf0.001"
-    before = len(runner._RUNNING)
-    t0 = _time.perf_counter()
-    first = stream_stateful_totals(spark, sf).collect()
-    t_first = _time.perf_counter() - t0
-    t0 = _time.perf_counter()
-    second = stream_stateful_totals(spark, sf).collect()
-    t_second = _time.perf_counter() - t0
-    assert second == first and len(first) > 0
-    assert len(runner._RUNNING) == before + 1  # reused, not restarted
-    assert t_second < 0.5 * t_first, (t_first, t_second)
+    sf = SF_DIR
+    with _stops_new_queries(spark):
+        before = _active_ids(spark)
+        t0 = _time.perf_counter()
+        first = stream_stateful_totals(spark, sf).collect()
+        t_first = _time.perf_counter() - t0
+        started = _active_ids(spark)
+        assert len(set(started) - set(before)) == 1  # a cold first call
+        t0 = _time.perf_counter()
+        second = stream_stateful_totals(spark, sf).collect()
+        t_second = _time.perf_counter() - t0
+        assert second == first and len(first) > 0
+        assert _active_ids(spark) == started  # reused, not restarted
+        assert t_second < 0.5 * t_first, (t_first, t_second)
+
+
+def test_concurrent_first_calls_share_one_query(spark, tmp_path):
+    """More threads than cores making the first call on one key at once:
+    one wins Spark's start, the others get the duplicate-name error and
+    drain the winner's query. One query stays active and every call sees
+    all rows."""
+    import sys
+    import threading
+
+    from nyc_taxi_pyspark_spark.streaming.runner import run_stream_cached
+
+    src, schema = _small_source(spark, tmp_path)
+    n_callers = 8  # more than the session's local[4] cores
+    barrier = threading.Barrier(n_callers)
+    counts, errors = [], []
+
+    def call():
+        barrier.wait()
+        try:
+            out = run_stream_cached(
+                spark, src, schema, lambda d: d, key="concurrent"
+            )
+            counts.append(out.count())
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with _stops_new_queries(spark):
+            before = _active_ids(spark)
+            threads = [threading.Thread(target=call) for _ in range(n_callers)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=180)
+            assert not any(t.is_alive() for t in threads)
+            assert not errors, errors
+            assert counts == [100] * n_callers
+            assert len(set(_active_ids(spark)) - set(before)) == 1
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_hung_drain_on_one_key_does_not_block_other_keys(spark, tmp_path):
+    """A drain stuck on one key (a UDF that waits for a release file)
+    must not block run_stream_cached on a DIFFERENT key: no lock is
+    shared between keys, so the independent call completes while the
+    stuck one is still draining."""
+    import threading
+
+    from nyc_taxi_pyspark_spark.streaming.runner import run_stream_cached
+
+    src, schema = _small_source(spark, tmp_path)
+    release = str(tmp_path / "release")
+
+    def wait_for_release(d):
+        @F.udf("long")
+        def held(x):
+            import os
+            import time
+
+            deadline = time.time() + 120
+            while not os.path.exists(release) and time.time() < deadline:
+                time.sleep(0.05)
+            return x
+
+        return d.select(held("event_id").alias("event_id"))
+
+    counts: dict = {}
+
+    def run(key, transform):
+        out = run_stream_cached(spark, src, schema, transform, key=key)
+        counts[key] = out.count()
+
+    with _stops_new_queries(spark):
+        stuck = threading.Thread(
+            target=run, args=("stuck", wait_for_release), daemon=True
+        )
+        stuck.start()
+        try:
+            other = threading.Thread(
+                target=run, args=("independent", lambda d: d), daemon=True
+            )
+            other.start()
+            other.join(timeout=120)
+            assert not other.is_alive(), "independent key blocked"
+            assert counts.get("independent") == 100
+            assert stuck.is_alive()  # the stuck drain was really running
+        finally:
+            open(release, "w").close()
+            stuck.join(timeout=120)
+        assert counts.get("stuck") == 100
 
 
 def test_stop_all_streams_drains_registry(spark):
-    """stop_all_streams must stop and untrack every persistent stream the
-    session owns — the pre-exit drain bench.py runs so no memory-sink
-    stream races JVM teardown (the BENCH_r11 tail stack trace)."""
+    """stop_all_streams must stop every query of the session — the
+    pre-exit drain bench.py runs so no memory-sink stream races JVM
+    teardown (the BENCH_r11 tail stack trace) — leave a sibling
+    session's queries running, and be idempotent."""
     from nyc_taxi_pyspark_spark.catalog.streaming import (
         stream_stateful_totals,
     )
     from nyc_taxi_pyspark_spark.streaming import runner
 
-    sf = "/root/testdata/sf0.001"
-    rows = stream_stateful_totals(spark, sf).collect()
-    assert len(rows) > 0
-    assert any(k[0] is spark for k in runner._RUNNING)
-    runner.stop_all_streams(spark)
-    assert not any(k[0] is spark for k in runner._RUNNING)
-    assert not spark.streams.active
-    # idempotent on an already-drained session
-    runner.stop_all_streams(spark)
-
-
-def _fake_entry(runner, stopped):
-    class _FakeQuery:
-        def stop(self):
-            stopped.append(True)
-
-    ent = runner._StreamEntry()
-    ent.q, ent.name = _FakeQuery(), "ghost_table"
-    return ent
-
-
-def test_dead_session_entries_are_evicted():
-    """Registry entries whose owning session is DEFINITIVELY gone — the
-    context object torn down entirely — must be swept (their queries
-    STOPPED, not orphaned): a discarded session is never looked up again,
-    so without the sweep its stream would run forever and the dict would
-    grow unboundedly in a long-lived multi-session server."""
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    stopped = []
-
-    class _DeadSession:  # no sparkContext at all -> definitive dead signal
-        pass
-
-    key = (_DeadSession(), "app-dead", "/nowhere", "t", "append")
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[key] = _fake_entry(runner, stopped)
-        popped = runner._pop_dead_sessions()
-        assert key not in runner._RUNNING
-        # the sweep must NOT stop queries while the global lock is held
-        # (a slow JVM stop() would stall every registry access — ADVICE
-        # r13); it hands the entries back for the caller to stop
-        assert stopped == []
-    for ent in popped:
-        with ent.lock:
-            if ent.q is not None:
-                ent.q.stop()
-    assert stopped == [True]
-
-
-def test_transient_probe_failure_does_not_evict():
-    """A transient error while PROBING a session (a py4j hiccup against a
-    healthy session) must not stop its running query: eviction acts only
-    on definitive dead signals, otherwise a concurrent thread of that
-    session pays a full stream restart and the accumulated memory-sink
-    state is lost (ADVICE r12)."""
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    stopped = []
-
-    class _FlakySession:  # probe raises a non-definitive error
-        @property
-        def sparkContext(self):
-            raise RuntimeError("py4j connection reset")
-
-    key = (_FlakySession(), "app-flaky", "/nowhere", "t", "append")
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[key] = _fake_entry(runner, stopped)
-        popped = runner._pop_dead_sessions()
-        assert popped == []
-        assert key in runner._RUNNING  # left alone, query untouched
-        runner._RUNNING.pop(key)
-    assert stopped == []
-
-
-def test_hung_drain_on_one_key_does_not_block_other_keys(spark, tmp_path):
-    """The global registry lock covers bookkeeping only; drains run under
-    per-key locks. A hung drain (simulated by holding one key's entry
-    lock) must not block run_stream_cached on a DIFFERENT key — before
-    the r13 restructure the single global lock serialized all keys and
-    one stuck stream blocked every concurrent serving thread (ADVICE
-    r12)."""
-    import threading
-
-    from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
-
-    hung_key = ("sentinel-session", "app-x", "/hung", "t", "append")
-    hung = runner._StreamEntry()
-    with runner._RUNNING_LOCK:
-        runner._RUNNING[hung_key] = hung
-
-    src = str(tmp_path / "src")
-    df = load_table(spark, "/root/testdata/sf0.001", "events").limit(100)
-    df.write.parquet(src)
-    schema = df.schema
-
-    result: list = []
-
-    def other_key():
-        out = runner.run_stream_cached(
-            spark, src, schema, lambda d: d, key="independent"
-        )
-        result.append(out.count())
-
-    hung.lock.acquire()  # the "stuck drain" on the sentinel key
-    try:
-        t = threading.Thread(target=other_key, daemon=True)
-        t.start()
-        t.join(timeout=120)
-        assert not t.is_alive(), "independent key blocked by a hung drain"
-        assert result and result[0] == 100
-    finally:
-        hung.lock.release()
-        with runner._RUNNING_LOCK:
-            runner._RUNNING.pop(hung_key, None)
+    sf = SF_DIR
+    sib = spark.newSession()
+    with _stops_new_queries(sib):
+        assert len(stream_stateful_totals(spark, sf).collect()) > 0
+        assert len(stream_stateful_totals(sib, sf).collect()) > 0
+        sib_ids = _active_ids(sib)
+        assert spark.streams.active and sib_ids
         runner.stop_all_streams(spark)
+        assert not spark.streams.active
+        assert _active_ids(sib) == sib_ids  # the sibling's keep running
+        runner.stop_all_streams(spark)  # idempotent on a drained session
+        assert not spark.streams.active
 
 
-def test_start_after_pop_does_not_orphan_stream(spark, tmp_path):
-    """If the registry entry is popped between insert and query start
-    (stop_all_streams running in that window, or a sibling starter's
-    failure-path pop), the SUCCESS path must not assign the query to the
-    popped entry and leave it active-but-untracked forever (ADVICE r13
-    medium): when the key is unclaimed it re-tracks the entry; when a
-    fresh entry claimed the key it stops its own query (the drained
-    memory sink still serves the call)."""
-    from nyc_taxi_pyspark_spark.sources.io import load_table
-    from nyc_taxi_pyspark_spark.streaming import runner
+def test_failed_start_leaves_no_active_query(spark, tmp_path):
+    """A stream whose first drain fails raises to the caller and leaves
+    no query running; the next call starts afresh."""
+    from nyc_taxi_pyspark_spark.streaming.runner import run_stream_cached
 
-    src = str(tmp_path / "src")
-    df = load_table(spark, "/root/testdata/sf0.001", "events").limit(50)
-    df.select("event_id", "event_type").write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    active_before = {q.id for q in spark.streams.active}
+    src, schema = _small_source(spark, tmp_path)
 
-    def _pop_my_key(tag):
-        # simulate stop_all_streams' pop phase landing in the window
-        # between registry insert and ent.lock / query start
-        with runner._RUNNING_LOCK:
-            for k in list(runner._RUNNING):
-                if k[3] == tag:
-                    return runner._RUNNING.pop(k)
-        return None
+    def failing(d):
+        @F.udf("long")
+        def boom(x):
+            raise ValueError("boom")
 
-    try:
-        # case 1: key left unclaimed after the pop -> entry re-inserted,
-        # stream stays tracked
-        def transform_popped(s):
-            _pop_my_key("popped")
-            return s
+        return d.select(boom("event_id").alias("event_id"))
 
-        out = runner.run_stream_cached(
-            spark, src, schema, transform_popped, key="popped"
-        )
-        assert out.count() == 50
-        ents = [
-            runner._RUNNING[k] for k in list(runner._RUNNING) if k[3] == "popped"
-        ]
-        assert len(ents) == 1 and ents[0].q is not None and ents[0].q.isActive
-
-        # case 2: a fresh entry claimed the key while ours was popped ->
-        # our just-started query is stopped, the fresh entry survives
-        fresh = runner._StreamEntry()
-
-        def transform_claimed(s):
-            _pop_my_key("claimed")
-            k = (
-                spark,
-                spark.sparkContext.applicationId,
-                os.path.realpath(src),
-                "claimed",
-                "append",
-            )
-            with runner._RUNNING_LOCK:
-                runner._RUNNING[k] = fresh
-            return s
-
-        out2 = runner.run_stream_cached(
-            spark, src, schema, transform_claimed, key="claimed"
-        )
-        assert out2.count() == 50  # drained sink still serves this call
-        ents2 = [
-            runner._RUNNING[k]
-            for k in list(runner._RUNNING)
-            if k[3] == "claimed"
-        ]
-        assert ents2 == [fresh]  # fresh claimant not clobbered
-        # no active query beyond the session's tracked ones: the query our
-        # call started against the popped entry must have been stopped
-        tracked = {
-            e.q.id
-            for e in runner._RUNNING.values()
-            if e.q is not None and e.q.isActive
-        }
-        orphans = (
-            {q.id for q in spark.streams.active} - active_before - tracked
-        )
-        assert not orphans
-    finally:
-        runner.stop_all_streams(spark)
+    with _stops_new_queries(spark):
+        before = _active_ids(spark)
+        with pytest.raises(Exception, match="boom"):
+            run_stream_cached(spark, src, schema, failing, key="failing")
+        assert _active_ids(spark) == before
 
 
 def test_restart_from_checkpoint_no_reprocessing(spark, tmp_path):

@@ -157,6 +157,32 @@ def test_explain_route(web):
     assert exc.value.code == 400
 
 
+def _status(url: str) -> tuple[int, str]:
+    """(status, body) for a request that may answer with an HTTP error."""
+    try:
+        return _get(url)
+    except urllib.error.HTTPError as e:
+        return e.code, e.read().decode()
+
+
+@pytest.mark.parametrize(
+    "path, message",
+    [
+        ("/sql?q=SELECT+1&n=abc", "n must be"),
+        ("/sql?q=SELECT+1&n=-1", "n must be"),
+        ("/preview?table=region&n=abc", "n must be"),
+        ("/preview?table=region&n=-5", "n must be"),
+        ("/preview?table=no_such_table", "unknown table"),
+        ("/preview?table=not+a+name", "unknown table"),
+    ],
+)
+def test_malformed_input_is_400(web, path, message):
+    """Outside input that cannot be parsed is the client's error: HTTP
+    400 with a message, never a 500 from the request guard."""
+    status, body = _status(f"{web}{path}")
+    assert status == 400 and message in body, (status, body)
+
+
 @pytest.fixture(scope="module")
 def web_with_model(spark, tmp_path_factory):
     """A second server with a trained model artifact configured — S12's
@@ -207,3 +233,19 @@ def test_score_surfaces_saved_metrics(web_with_model):
     assert "proba1" in out["rows"][0]
     status, html = _get(f"{base}/score?n=5")
     assert status == 200 and "training metrics" in html and "auc=" in html
+
+
+@pytest.mark.parametrize(
+    "query, message",
+    [
+        ("threshold=abc", "threshold must be"),
+        ("threshold=nan", "threshold must be"),
+        ("threshold=1.5", "threshold must be"),
+        ("n=abc", "n must be"),
+        ("n=-3", "n must be"),
+    ],
+)
+def test_score_malformed_input_is_400(web_with_model, query, message):
+    base, _metrics = web_with_model
+    status, body = _status(f"{base}/score?{query}&format=json")
+    assert status == 400 and message in body, (status, body)
