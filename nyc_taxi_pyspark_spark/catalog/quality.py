@@ -1065,8 +1065,10 @@ def events_distribution_drift(spark, sf_dir):
     arithmetic of integer counts, so it hash-checks. Per-band terms are
     quantized to 1e-9 fixed point before the cross-band sum, making the
     only double summation order-independent (exact int64). Plan: one
-    scan, one (type, band) aggregate, one type-level rollup — both keyed
-    shuffles with map-side combine, no windows, no collects. Direct scan
+    scan, one (type, band) aggregate (keyed shuffle with map-side
+    combine), then on the ≤50-row cell table one per-type window for the
+    half totals and the type-level rollup on that same exchange — no
+    join, no collects. Direct scan
     (r16, guide §2.4): the per-row work before the first keyed exchange
     is a band expression, so the round-robin repartition was a pure
     extra exchange in front of a shuffle that redistributes anyway —
@@ -1104,10 +1106,18 @@ def _drift_banded(ev):
 def _chi2_report(cells):
     """Chi-square homogeneity rollup from (event_type, band, o1, o2)
     cells — per-band terms nano-quantized so the cross-band sum is an
-    exact, order-independent int64."""
-    tot = cells.groupBy("event_type").agg(
-        F.sum("o1").cast("bigint").alias("n1"),
-        F.sum("o2").cast("bigint").alias("n2"),
+    exact, order-independent int64. The per-type marginals n1/n2 are
+    window sums over the (≤50-row) cell table, so the plan has one branch
+    and no join. A NULL event type gets no row: the oracle takes its
+    marginals through an equi-join on event_type, which never matches
+    NULL."""
+    by_type = Window.partitionBy("event_type")
+    cells = cells.filter(F.col("event_type").isNotNull()).select(
+        "event_type",
+        "o1",
+        "o2",
+        F.sum("o1").over(by_type).cast("bigint").alias("n1"),
+        F.sum("o2").over(by_type).cast("bigint").alias("n2"),
     )
     o1, o2 = F.col("o1").cast("double"), F.col("o2").cast("double")
     n1, n2 = F.col("n1").cast("double"), F.col("n2").cast("double")
@@ -1122,11 +1132,9 @@ def _chi2_report(cells):
         (o2 - e2) * (o2 - e2), e2
     )
     tq = F.floor(term * F.lit(1e9) + F.lit(0.5)).cast("bigint")
-    terms = cells.join(tot, "event_type").select(
-        "event_type", "n1", "n2", tq.alias("tq")
-    )
     return (
-        terms.groupBy("event_type", "n1", "n2")
+        cells.select("event_type", "n1", "n2", tq.alias("tq"))
+        .groupBy("event_type", "n1", "n2")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bands"),
             (F.sum("tq").cast("double") / F.lit(1e9)).alias("chi_square"),

@@ -67,6 +67,9 @@ _STYLE = (
 )
 
 
+_KPI_PAGES = ("payment", "heatmap", "distance")
+
+
 class BadRequest(ValueError):
     """Malformed request input, answered with HTTP 400 and the message."""
 
@@ -262,6 +265,10 @@ class WebApp:
         from nyc_taxi_pyspark_spark.sources.io import to_pandas_sanitized
 
         which = q.get("which", ["payment"])[0]
+        if which not in _KPI_PAGES:
+            raise BadRequest(
+                f"which must be one of {', '.join(_KPI_PAGES)}, got {which!r}"
+            )
         featured = self.featured_trips()
         if which == "heatmap":
             df = kpi_heatmap(featured)
@@ -270,11 +277,8 @@ class WebApp:
         else:
             df = kpi_by_payment(featured, payment_lookup(self.engine.spark))
         pdf = to_pandas_sanitized(df, max_rows=self.preview_cap)
-        links = (
-            "<p><a href='/kpi?which=payment'>payment</a> | "
-            "<a href='/kpi?which=heatmap'>heatmap</a> | "
-            "<a href='/kpi?which=distance'>distance</a></p>"
-        )
+        links = " | ".join(f"<a href='/kpi?which={k}'>{k}</a>" for k in _KPI_PAGES)
+        links = f"<p>{links}</p>"
         return 200, "text/html", _page(f"kpi: {which}", links + _table_html(pdf))
 
     def reports(self, _q) -> tuple[int, str, bytes]:

@@ -35,24 +35,39 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_engine_pyfile_added", False):
         return
+    sc.addPyFile(package_zip())
+    sc._engine_pyfile_added = True
+
+
+def package_zip() -> str:
+    """Zip the package's current ``.py`` sources into a new temp file and
+    return its path. The name is unique (``mkstemp``), so a file left at
+    a reused name can never be shipped in place of the current sources,
+    and the file is removed when this process exits."""
+    import atexit
     import os
     import tempfile
     import zipfile
 
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     parent = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"nyc_taxi_pyspark_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _dirs, files in os.walk(pkg_root):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(dirpath, f)
-                        z.write(full, os.path.relpath(full, parent))
-    sc.addPyFile(zpath)
-    sc._engine_pyfile_added = True
+    fd, zpath = tempfile.mkstemp(prefix="nyc_taxi_pyspark_spark_", suffix=".zip")
+    atexit.register(_remove_quietly, zpath)
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+        for dirpath, _dirs, files in os.walk(pkg_root):
+            for name in files:
+                if name.endswith(".py"):
+                    full = os.path.join(dirpath, name)
+                    z.write(full, os.path.relpath(full, parent))
+    return zpath
+
+
+def _remove_quietly(path: str) -> None:
+    import contextlib
+    import os
+
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 _TS_UNIT_CACHE: dict[str, bool] = {}

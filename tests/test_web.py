@@ -174,6 +174,7 @@ def _status(url: str) -> tuple[int, str]:
         ("/preview?table=region&n=-5", "n must be"),
         ("/preview?table=no_such_table", "unknown table"),
         ("/preview?table=not+a+name", "unknown table"),
+        ("/kpi?which=bogus", "which must be"),
     ],
 )
 def test_malformed_input_is_400(web, path, message):
